@@ -5,11 +5,12 @@ path except where noted:
 
 - exact: hash-groupBy on a content digest (md5).  One shuffle on the hash.
 - minhash_lsh: shingle → minhash signature → band-bucket → candidate pairs.
-  Signatures via built-in xxhash64 with per-permutation seeds (stays in
-  whole-stage codegen); banding turns the O(n²) pair space into per-bucket
-  joins.  At 100 TB the bucket join is the only shuffle and hot buckets are
-  bounded by band width; AQE skew-split covers the rest.
-- simhash: 64-bit signed-projection fingerprint; near-dups differ in few
+  Signatures via the md5-derived hash family (llm/portable.py) with
+  per-permutation affine mixes (stays in whole-stage codegen); banding
+  turns the O(n²) pair space into per-bucket joins.  At 100 TB the bucket
+  join is the only shuffle and hot buckets are bounded by band width; AQE
+  skew-split covers the rest.
+- simhash: 60-bit signed-projection fingerprint; near-dups differ in few
   bits.  Hamming-ball probing via rotate-band buckets.
 - ngram_jaccard: exact Jaccard on shingle sets for candidate verification
   (the precise re-rank after LSH recall).
@@ -19,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from dataintegration_ecomprovider_spark.llm.portable import md5_int60
 
 
 def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -72,9 +75,10 @@ def shingles(text: Column, n: int = 3) -> Column:
 
 
 # Permutation family: affine maps mod the Mersenne prime 2^31-1 over the
-# base xxhash64.  Bounded intermediates (< 2^57) keep ANSI-mode long
-# arithmetic overflow-free; coefficients derive from the permutation index —
-# no RNG state, identical across retries and cluster sizes.
+# base md5_int60 shingle hash.  Bounded intermediates (< 2^57) keep
+# ANSI-mode long arithmetic overflow-free; coefficients derive from the
+# permutation index — no RNG state, identical across retries and cluster
+# sizes.
 _MERSENNE31 = 2_147_483_647
 
 
@@ -106,7 +110,6 @@ def minhash_signatures(
     text_col: str = "text",
     num_hashes: int = 32,
     shingle_n: int = 3,
-    portable: bool = False,
 ) -> DataFrame:
     """(id, sig: array<bigint>) minhash signatures.
 
@@ -117,16 +120,9 @@ def minhash_signatures(
     permutation — measured 30× slower at sf0.1 — because Catalyst's
     CollapseProject re-inlines the shared subexpression into every branch.
 
-    `portable=True` swaps the base shingle hash from xxhash64 to the
-    md5-derived family (llm/portable.py) so a DuckDB oracle can replicate
-    signatures byte-for-byte; same plan shape, slower hash.
+    The base shingle hash is md5_int60 (llm/portable.py), so a DuckDB
+    oracle replicates the signatures byte-for-byte.
     """
-    if portable:
-        from dataintegration_ecomprovider_spark.llm.portable import md5_int60
-
-        base = md5_int60(F.col("s"))
-    else:
-        base = F.xxhash64("s")
     # guide §2.5 spread lives at the CORPUS-SIZED call sites
     # (minhash_candidates, the dedup-index seed), not here: this
     # primitive also receives delta-sized CDC batches, where the added
@@ -137,7 +133,7 @@ def minhash_signatures(
     )
     exploded = with_words.select(
         "id", F.explode(shingles_from_words(F.col("w"), shingle_n)).alias("s")
-    ).select("id", F.pmod(base, F.lit(_MERSENNE31)).alias("h"))
+    ).select("id", F.pmod(md5_int60(F.col("s")), F.lit(_MERSENNE31)).alias("h"))
     mins = exploded.groupBy("id").agg(
         *[F.expr(_min_mix_sql(i)).alias(f"m{i}") for i in range(num_hashes)]
     )
@@ -148,22 +144,18 @@ def band_buckets(
     sig: DataFrame,
     num_hashes: int = 32,
     bands: int = 8,
-    portable: bool = False,
     id_col: str = "id",
     sig_col: str = "sig",
 ) -> DataFrame:
     """(id, band, bucket) LSH band rows from a minhash signature table —
     the banding step shared by minhash_candidates (within-corpus pairs)
-    and llm/incremental.py (batch-vs-index matching).  `portable=True`
-    spells the bucket as the literal signature-slice string (engine-
-    independent join key); the fast path hashes the slice with Murmur3."""
+    and llm/incremental.py (batch-vs-index matching).  The bucket is the
+    literal signature-slice string, an engine-independent join key."""
     rows_per_band = num_hashes // bands
 
     def bucket_of(b: int) -> Column:
         sl = F.slice(sig_col, b * rows_per_band + 1, rows_per_band)
-        if portable:
-            return F.concat_ws(",", sl.cast("array<string>"))
-        return F.hash(sl).cast("string")
+        return F.concat_ws(",", sl.cast("array<string>"))
 
     return sig.select(
         F.col(id_col).alias("id"),
@@ -185,18 +177,12 @@ def minhash_candidates(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    portable: bool = False,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) via banded minhash LSH.
 
     rows = docs; output = distinct candidate pairs that share ≥1 band
     bucket.  The band bucket is the shuffle key — pairs never materialize
     globally, only within buckets.
-
-    `portable=True`: md5-family base hash + the band bucket as the literal
-    signature-slice string (instead of Murmur3 via F.hash) so the bucket
-    join key is engine-independent — slightly wider shuffle keys, same
-    join shape.
     """
     from dataintegration_ecomprovider_spark import runtime
 
@@ -206,10 +192,9 @@ def minhash_candidates(
     # round-13 A/B site (2.56 → 2.25 s), moved here from the shared
     # primitive so delta-sized signature calls skip the Exchange
     sig = minhash_signatures(
-        runtime.spread_scan(docs), id_col, text_col, num_hashes, shingle_n,
-        portable,
+        runtime.spread_scan(docs), id_col, text_col, num_hashes, shingle_n
     )
-    banded = band_buckets(sig, num_hashes, bands, portable)
+    banded = band_buckets(sig, num_hashes, bands)
     # Pairs via groupBy-collect within each (band, bucket) — NOT a banded
     # self-join: the signature pipeline is consumed exactly once (no
     # corpus-scale persist needed) and the only shuffle is the bucket
@@ -293,15 +278,15 @@ def _simhash_from_hashes(hashes: Column, bits: int) -> Column:
     """The SimHash bit-aggregation, single source of truth for BOTH public
     forms (simhash_signatures and the Column-form simhash): per bit i, the
     sign of the sum of (+1/-1) contributions of each shingle-hash's bit i;
-    positive sums set bit i of the fingerprint.  Capped at 63 bits to stay
-    within signed-long positive range."""
+    positive sums set bit i of the fingerprint.  Capped at 60 bits:
+    md5_int60 hashes carry no information above bit 59."""
 
     def bit_contrib(i: int):
         # factory to avoid the late-binding loop-variable lambda trap
         return lambda h: F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
 
     bit_cols = []
-    for i in range(min(bits, 63)):
+    for i in range(min(bits, 60)):
         contrib = F.transform(hashes, bit_contrib(i))
         total = F.aggregate(contrib, F.lit(0), lambda acc, x: acc + x)
         bit_cols.append(
@@ -314,40 +299,32 @@ def simhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int = 64,
+    bits: int = 60,
     out_col: str = "simhash",
-    portable: bool = False,
 ) -> DataFrame:
     """(id, simhash) via staged projections: words → shingles → hash array
-    materialize as real columns, so the 63 per-bit aggregates all read the
+    materialize as real columns, so the 60 per-bit aggregates all read the
     SAME hash-array attribute instead of re-deriving the shingle pipeline
-    per bit (the Column-function form re-evaluates it 63×).
-
-    `portable=True`: md5-family shingle hash (60 usable bits — pass
-    bits<=60) so a DuckDB oracle replicates the fingerprint exactly."""
-    if portable:
-        from dataintegration_ecomprovider_spark.llm.portable import md5_int60
-
-        hash_fn = md5_int60
-    else:
-        hash_fn = F.xxhash64
+    per bit (the Column-function form re-evaluates it 60×).  The shingle
+    hash is md5_int60, so a DuckDB oracle replicates the fingerprint
+    exactly."""
     hashed = (
         docs.select(F.col(id_col), words_of(F.col(text_col)).alias("__w"))
         .select(F.col(id_col), shingles_from_words(F.col("__w"), 2).alias("__sh"))
-        .select(F.col(id_col), F.transform("__sh", lambda s: hash_fn(s)).alias("__h"))
+        .select(F.col(id_col), F.transform("__sh", md5_int60).alias("__h"))
     )
     return hashed.select(
         F.col(id_col), _simhash_from_hashes(F.col("__h"), bits).alias(out_col)
     )
 
 
-def simhash(text: Column, bits: int = 64) -> Column:
-    """64-bit SimHash over word shingles as a single Column expression.
+def simhash(text: Column, bits: int = 60) -> Column:
+    """60-bit SimHash over word shingles as a single Column expression.
     Same formula as simhash_signatures by construction (both delegate to
     _simhash_from_hashes — tests/test_llm.py parity-pins them); prefer the
     DataFrame form when you control the plan: this one re-derives the
     shingle pipeline inside each bit aggregate."""
-    hashes = F.transform(shingles(text, 2), lambda s: F.xxhash64(s))
+    hashes = F.transform(shingles(text, 2), md5_int60)
     return _simhash_from_hashes(hashes, bits)
 
 

@@ -59,7 +59,6 @@ def match_against_index(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    portable: bool = False,
 ) -> DataFrame:
     """(new_id, corpus_id, est_jaccard) for every batch document whose
     estimated similarity to an indexed document reaches `threshold`.
@@ -68,7 +67,7 @@ def match_against_index(
     (id, sig)); `index_sigs`/`index_bands` are the corpus side tables.
     Candidates come from the (band, bucket) join — only signature
     agreement is scored, never text."""
-    new_bands = dedup.band_buckets(new_sigs, num_hashes, bands, portable)
+    new_bands = dedup.band_buckets(new_sigs, num_hashes, bands)
     cand = (
         new_bands.withColumnRenamed("id", "new_id")
         .join(
@@ -105,7 +104,6 @@ def maintain_dedup_index(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    portable: bool = False,
 ) -> dict:
     """Maintain the MinHash signature index (`dst` = (id, sig),
     `bands_table` = (id, band, bucket)) as a CDC-DRIVEN VIEW of the
@@ -132,8 +130,8 @@ def maintain_dedup_index(
     version; the watermark lives in the store sync-state under
     ``dedup-index:<dst>``.  The maintained index always equals a
     from-scratch minhash_signatures/band_buckets over the current
-    corpus (pinned against a full rebuild and a DuckDB oracle on the
-    portable family — `llm_dedup_index_cdc_portable`).  Same maintainer
+    corpus (pinned against a full rebuild and a DuckDB oracle —
+    `llm_dedup_index_cdc_portable`).  Same maintainer
     family as similarity.maintain_topic_assignments; reference analog:
     the incremental re-run model
     (/root/reference/src/EcomProvider.cs:25, 937-966).
@@ -149,9 +147,9 @@ def maintain_dedup_index(
 
     def _build(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
         sigs = dedup.minhash_signatures(
-            docs, id_col, text_col, num_hashes, shingle_n, portable
+            docs, id_col, text_col, num_hashes, shingle_n
         )
-        return sigs, dedup.band_buckets(sigs, num_hashes, bands, portable)
+        return sigs, dedup.band_buckets(sigs, num_hashes, bands)
 
     def _seed() -> str:
         # corpus-sized input: spread here, NOT inside _build — the delta
@@ -246,7 +244,6 @@ def dedup_batch_against_index(
     bands: int = 8,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    portable: bool = False,
 ) -> dict[str, DataFrame]:
     """One ingest step.  Returns
     ``{"kept": batch docs novel vs the index, "matches": (new_id,
@@ -260,14 +257,14 @@ def dedup_batch_against_index(
     (dedup.minhash_candidates / cluster.dedup_clusters) on the batch
     first if ingest batches can self-duplicate."""
     sigs = dedup.minhash_signatures(
-        batch_docs, id_col, text_col, num_hashes, shingle_n, portable
+        batch_docs, id_col, text_col, num_hashes, shingle_n
     )
     if index_sigs is None or index_bands is None:
         kept_sigs = sigs
         matches = None
     else:
         matches = match_against_index(
-            sigs, index_sigs, index_bands, num_hashes, bands, threshold, portable
+            sigs, index_sigs, index_bands, num_hashes, bands, threshold
         )
         dup_ids = matches.select(F.col("new_id").alias("id")).dropDuplicates(["id"])
         kept_sigs = sigs.join(dup_ids, "id", "left_anti")
@@ -278,5 +275,5 @@ def dedup_batch_against_index(
         "kept": kept,
         "matches": matches,
         "sigs": kept_sigs,
-        "bands": dedup.band_buckets(kept_sigs, num_hashes, bands, portable),
+        "bands": dedup.band_buckets(kept_sigs, num_hashes, bands),
     }

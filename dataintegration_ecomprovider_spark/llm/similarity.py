@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dataintegration_ecomprovider_spark.llm.portable import md5_int60
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
@@ -69,34 +71,25 @@ def brute_force_topk(
     )
 
 
-def hyperplane_bucket(vec: Column, planes: int = 8, portable: bool = False) -> Column:
+def hyperplane_bucket(vec: Column, planes: int = 8) -> Column:
     """Deterministic random-hyperplane LSH bucket id.
 
-    Plane p's normal is pseudo-random ±1 per dimension, derived from
-    xxhash64(p, dim) parity — no RNG state, identical across retries and
-    cluster sizes.  bucket = sum over planes of sign_bit(p) << p.
-
-    `portable=True` derives the parity from md5('p:d') (llm/portable.py)
-    so a DuckDB oracle builds the identical planes.
+    Plane p's normal is pseudo-random ±1 per dimension, derived from the
+    parity of md5_int60('p:d') (llm/portable.py) — no RNG state,
+    identical across retries and cluster sizes, and a DuckDB oracle
+    builds the identical planes.  bucket = sum over planes of
+    sign_bit(p) << p.
     """
-    if portable:
-        from dataintegration_ecomprovider_spark.llm.portable import md5_int60
 
-        def dim_sign(p: int):
-            return lambda d: F.when(
-                md5_int60(
-                    F.concat_ws(":", F.lit(str(p)), d.cast("string"))
-                ).bitwiseAND(F.lit(1))
-                == 1,
-                F.lit(1.0),
-            ).otherwise(F.lit(-1.0))
-    else:
-
-        def dim_sign(p: int):
-            # factory to avoid the (element, index) two-parameter lambda trap
-            return lambda d: F.when(
-                F.xxhash64(F.lit(p), d).bitwiseAND(F.lit(1)) == 1, F.lit(1.0)
-            ).otherwise(F.lit(-1.0))
+    def dim_sign(p: int):
+        # factory to avoid the (element, index) two-parameter lambda trap
+        return lambda d: F.when(
+            md5_int60(
+                F.concat_ws(":", F.lit(str(p)), d.cast("string"))
+            ).bitwiseAND(F.lit(1))
+            == 1,
+            F.lit(1.0),
+        ).otherwise(F.lit(-1.0))
 
     def plane_sign(p: int) -> Column:
         signed = F.zip_with(
@@ -147,7 +140,6 @@ def near_dup_pairs_lsh(
     planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    portable: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs, LSH-pruned: only vectors sharing a hyperplane
     bucket are compared.  The scale path — within-bucket self-join instead
@@ -156,7 +148,7 @@ def near_dup_pairs_lsh(
     tagged = embeddings.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
-        hyperplane_bucket(F.col(vec_col), planes, portable).alias("bucket"),
+        hyperplane_bucket(F.col(vec_col), planes).alias("bucket"),
     )
     a = tagged.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"), "bucket")
     b = tagged.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"), "bucket")
@@ -200,7 +192,7 @@ def kmeans_refine(
 
     `round_means=N` rounds each recomputed centroid component to N
     decimals: engines sum floating-point means in different orders, so a
-    cross-engine value check (the `_portable` oracle twins) needs the
+    cross-engine value check (the DuckDB oracles) needs the
     iteration's only data-dependent floats pinned — at N=9 the rounding
     is far below any assignment decision yet above summation-order noise.
     Default None preserves full-precision means."""
@@ -252,14 +244,13 @@ def ivf_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    portable: bool = False,
     refine_iters: int = 0,
 ) -> DataFrame:
     """IVF-style approximate top-k: vectors are assigned to their nearest
     centroid cell; each query scores only the `n_probe` nearest cells.
 
     Centroids are picked by deterministic hash rank — the n_centroids
-    smallest xxhash64(id) values — a uniform pseudo-random-but-stable
+    smallest md5_int60(id) values — a uniform pseudo-random-but-stable
     sample that needs NO driver-side count (the old picker ran
     embeddings.count() at plan-build time, an extra full pass at 100 TB,
     and its `id % stride` filter assumed dense numeric ids).  Expressed as
@@ -268,12 +259,11 @@ def ivf_topk(
     merges — no global sort, no single-partition shuffle.  At scale a
     k-means refinement can replace the picker without touching the
     cell-assignment/probe plan (the shape is: broadcast centroids,
-    partition-local assignment, shuffle once on cell id).  `portable=True`
-    ranks centroids by md5 of the id string instead of xxhash64 so a
-    DuckDB oracle picks the identical centroid set."""
+    partition-local assignment, shuffle once on cell id).  The md5 rank
+    lets a DuckDB oracle pick the identical centroid set."""
     idx = ivf_index(
         embeddings, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col,
-        portable=portable, refine_iters=refine_iters,
+        refine_iters=refine_iters,
     )
     return ivf_topk_from_index(
         queries, idx["centroids"], idx["cells"], k=k, n_probe=n_probe,
@@ -305,7 +295,6 @@ def ivf_index(
     n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    portable: bool = False,
     refine_iters: int = 0,
     quantized: bool = False,
 ) -> dict[str, DataFrame]:
@@ -324,12 +313,7 @@ def ivf_index(
     faiss IVF-SQ8 layout — assignment stays full-precision, the
     PERSISTED corpus shrinks ~8x, probes score code-vs-code (serve with
     ivf_topk_from_index(quantized=True))."""
-    if portable:
-        from dataintegration_ecomprovider_spark.llm.portable import md5_int60
-
-        rank_hash = md5_int60(F.col("cid").cast("string"))
-    else:
-        rank_hash = F.xxhash64(F.col("cid"))
+    rank_hash = md5_int60(F.col("cid").cast("string"))
     centroids = (
         embeddings.select(
             F.col(id_col).alias("cid"),
@@ -342,9 +326,9 @@ def ivf_index(
         centroids = kmeans_refine(
             embeddings, centroids, iters=refine_iters, id_col=id_col,
             vec_col=vec_col,
-            # portable builds are oracle-checked cross-engine: pin the
-            # refined means against summation-order float noise
-            round_means=9 if portable else None,
+            # oracle-checked cross-engine: pin the refined means against
+            # summation-order float noise
+            round_means=9,
         )
     cells = _assign_to_centroids(
         embeddings.select(F.col(id_col).alias("neighbor_id"),
@@ -407,7 +391,6 @@ def lsh_topk(
     planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    portable: bool = False,
 ) -> DataFrame:
     """Approximate top-k: score only candidates sharing the query's
     hyperplane bucket.  Same output shape as brute_force_topk (a query with
@@ -416,12 +399,12 @@ def lsh_topk(
     cand = embeddings.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cand_vec"),
-        hyperplane_bucket(F.col(vec_col), planes, portable).alias("bucket"),
+        hyperplane_bucket(F.col(vec_col), planes).alias("bucket"),
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("query_vec"),
-        hyperplane_bucket(F.col(vec_col), planes, portable).alias("bucket"),
+        hyperplane_bucket(F.col(vec_col), planes).alias("bucket"),
     )
     scored = (
         q.join(cand, "bucket")
@@ -448,7 +431,6 @@ def cluster_assignments(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    portable: bool = False,
 ) -> DataFrame:
     """Corpus topic clustering: deterministic-hash-seeded k-means (the
     ivf_index picker + kmeans_refine Lloyd loop) and one final
@@ -457,12 +439,12 @@ def cluster_assignments(
     balance/sample per topic (pair with sampling.temperature_mix on the
     cid column).  Scale shape is IVF's: broadcast ≤n_clusters centroids,
     partition-local scoring, one top-1 window per pass — the corpus
-    never self-joins.  `portable=True` seeds by md5 rank and pins
-    refined means at 9 decimals so a DuckDB oracle reproduces the exact
-    assignment (see kmeans_refine)."""
+    never self-joins.  Seeding by md5 rank and refined means pinned at 9
+    decimals let a DuckDB oracle reproduce the exact assignment (see
+    kmeans_refine)."""
     idx = ivf_index(
         embeddings, n_centroids=n_clusters, id_col=id_col, vec_col=vec_col,
-        portable=portable, refine_iters=iters,
+        refine_iters=iters,
     )
     return assign_to_index(
         embeddings, idx["centroids"], id_col=id_col, vec_col=vec_col
@@ -517,7 +499,6 @@ def recenter_topics(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    portable: bool = False,
     centroids_table: str = "topic_centroids",
     assignments_table: str = "topic_assignments",
     min_mean_csim: float | None = None,
@@ -585,7 +566,7 @@ def recenter_topics(
                     "measured": measured, "measured_version": observed}
     idx = ivf_index(
         corpus, n_centroids=n_clusters, id_col=id_col, vec_col=vec_col,
-        portable=portable, refine_iters=iters,
+        refine_iters=iters,
     )
     manifest = publish.publish_tables(
         spark,
@@ -648,7 +629,7 @@ def maintain_topic_assignments(
     The maintained state always equals
     ``assign_to_index(current source, current centroids)`` whenever the
     centroids predate the watermark — pinned against a full recompute
-    (and a DuckDB oracle on the portable hash family) in
+    (and a DuckDB oracle) in
     tests/test_llm_incremental.py.  Reference analog: the incremental
     re-run model (/root/reference/src/EcomProvider.cs:25, 937-966) —
     derived state follows the feed without re-reading the world.
@@ -734,7 +715,6 @@ def semantic_dedup(
     n_centroids: int | str = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    portable: bool = False,
     refine_iters: int = 0,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, "SemDeDup:
@@ -745,7 +725,7 @@ def semantic_dedup(
     greedy within-cluster sweep is order-dependent; this first-wins variant
     is the deterministic, engine-independent policy (the same convention as
     E13 first-wins dedup), so a DuckDB oracle reproduces it exactly
-    (portable=True → md5-ranked centroid pick, see ivf_index).
+    (md5-ranked centroid pick, see ivf_index).
 
     Scale shape — why this survives 100 TB where naive semantic dedup
     (all-pairs cosine) cannot: clustering via the IVF machinery is one
@@ -766,7 +746,7 @@ def semantic_dedup(
         n_centroids = max(16, int(embeddings.count() ** 0.5))
     idx = ivf_index(
         embeddings, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col,
-        portable=portable, refine_iters=refine_iters,
+        refine_iters=refine_iters,
     )
     cells = idx["cells"]  # (cid, neighbor_id, cand_vec)
     a = cells.select(
@@ -886,11 +866,14 @@ def pq_index(
     encode pass expands each vector to m·k scored rows PARTITION-LOCALLY
     against the broadcast codebook and reduces with a map-side
     min(struct(dist, c)) — one shuffle on the id for the final
-    per-vector code assembly, no corpus self-join anywhere."""
+    per-vector code assembly, no corpus self-join anywhere.
+
+    The sample ranks by xxhash64(id) unless `portable=True` ranks by
+    md5_int60 like ivf_index: the one operator left with two hash
+    families, because the fixture's recall floors are pinned on the
+    xxhash64 sample (see llm/portable.py)."""
     spark = embeddings.sparkSession
     if portable:
-        from dataintegration_ecomprovider_spark.llm.portable import md5_int60
-
         rank_hash = md5_int60(F.col(id_col).cast("string"))
     else:
         rank_hash = F.xxhash64(F.col(id_col))
@@ -1505,7 +1488,7 @@ def ivfpq_index(
     cid) and maintain codes from CDC with maintain_ivfpq_codes."""
     ivf = ivf_index(
         embeddings, n_centroids=n_centroids, id_col=id_col,
-        vec_col=vec_col, portable=portable, refine_iters=refine_iters,
+        vec_col=vec_col, refine_iters=refine_iters,
     )
     if residual:
         resid = _ivfpq_residuals(

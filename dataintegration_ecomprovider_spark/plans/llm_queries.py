@@ -3,11 +3,9 @@ similarity search, text analysis, multimodal plumbing — over the
 `documents` and `embeddings` fixture tables.
 
 Oracle-checked where the computation is exactly expressible in DuckDB SQL.
-The hash-dependent operators (minhash/simhash/LSH/IVF) each appear twice:
-the xxhash64 fast path (rows-only + pytest invariants, tests/test_llm.py)
-and a `_portable` variant on the md5-derived hash family (llm/portable.py)
-with a full DuckDB oracle — the same plan, provable against a second
-engine.
+The hash-dependent operators (minhash/simhash/LSH/IVF) hash with the
+md5-derived family (llm/portable.py), which DuckDB reproduces, so each has
+a full DuckDB oracle; their entries keep the historical `_portable` names.
 """
 
 from __future__ import annotations
@@ -70,19 +68,6 @@ FROM documents GROUP BY md5(text)
 """
 
 
-# --- minhash LSH near-dup candidates (rows-only: xxhash64 engine hash) ----
-def q_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = Catalog(spark, sf_dir).table("documents")
-    pairs = dedup.minhash_candidates(docs, num_hashes=32, bands=8)
-    return dedup.jaccard_pairs(docs, pairs).filter(F.col("jaccard") >= 0.5)
-
-
-# --- simhash fingerprints (rows-only: xxhash64 engine hash) ---------------
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = Catalog(spark, sf_dir).table("documents")
-    return dedup.simhash_signatures(docs)
-
-
 # --- exact n-gram jaccard on a deterministic candidate set ----------------
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jaccard over word-3-gram shingle sets for a deterministic pair set
@@ -135,13 +120,6 @@ ranked AS (
 )
 SELECT query_id, neighbor_id, similarity, rank FROM ranked WHERE rank <= 5
 """
-
-
-# --- LSH-bucketed ANN (rows-only: xxhash64-derived hyperplanes) -----------
-def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = Catalog(spark, sf_dir).table("embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.lsh_topk(emb, queries, k=5, planes=6)
 
 
 # --- text quality features ------------------------------------------------
@@ -258,7 +236,7 @@ FROM documents
 def q_near_dup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact near-dup pairs over a deterministic slice (every 5th vector) at
     cosine ≥ 0.2; the LSH-pruned full-table variant is
-    llm_near_dup_embedding_lsh (rows-only)."""
+    llm_near_dup_embedding_lsh_portable."""
     emb = Catalog(spark, sf_dir).table("embeddings").filter(F.col("vec_id") % 5 == 0)
     return similarity.near_dup_pairs(emb, threshold=0.2)
 
@@ -273,13 +251,6 @@ FROM cand a JOIN cand b ON a.vec_id < b.vec_id
 WHERE ROUND(list_dot_product(a.v, b.v) /
             (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) >= 0.2
 """
-
-
-def q_near_dup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # guide §2.5 spread (round-14 A/B 1.04 → 0.62 s): the bucket
-    # self-join and pair filter are order-insensitive
-    emb = runtime.spread_scan(Catalog(spark, sf_dir).table("embeddings"))
-    return similarity.near_dup_pairs_lsh(emb, threshold=0.2, planes=6)
 
 
 # --- 8-bit quantized ANN (memory-reduction path) --------------------------
@@ -566,13 +537,6 @@ SELECT query_id, neighbor_id, similarity, rank FROM final WHERE rank <= 5
 """
 
 
-# --- IVF-bucketed ANN (rows-only: recall invariant in tests/test_llm.py) --
-def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = Catalog(spark, sf_dir).table("embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.ivf_topk(emb, queries, k=5, n_centroids=16, n_probe=4)
-
-
 # --- multimodal frame sampling (1:N fan-out via mapInPandas) --------------
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling plumbing: payload chunked into 64-byte frames, every
@@ -797,11 +761,10 @@ WHERE epoch < epochs
 """
 
 
-# --- portable-hash variants: the SAME algorithms, oracle-checkable --------
-# The fast paths hash with xxhash64 (rows-only driver checks); these
-# variants run the identical plans with the md5-derived hash family
-# (llm/portable.py) that DuckDB reproduces byte-for-byte, so minhash LSH /
-# simhash / hyperplane LSH / IVF each get a full value-hash oracle gate.
+# --- hash-dependent operators, oracle-checked ----------------------------
+# These run on the md5-derived hash family (llm/portable.py) that DuckDB
+# reproduces byte-for-byte, so minhash LSH / simhash / hyperplane LSH /
+# IVF each get a full value-hash oracle gate.
 
 # DuckDB spelling of words_of / shingles_from_words (llm/dedup.py:44-63):
 # split on \s+ after trim+lower; n-gram windows mirror Spark's
@@ -830,11 +793,11 @@ hs AS (
 
 
 def q_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """llm_dedup_minhash_lsh with the portable hash family: identical
-    banding/verify plan, md5-derived shingle hashes and literal
-    signature-slice band buckets so DuckDB replicates every signature."""
+    """MinHash LSH near-dup candidates, Jaccard-verified: md5-derived
+    shingle hashes and literal signature-slice band buckets, so DuckDB
+    replicates every signature."""
     docs = Catalog(spark, sf_dir).table("documents")
-    pairs = dedup.minhash_candidates(docs, num_hashes=32, bands=8, portable=True)
+    pairs = dedup.minhash_candidates(docs, num_hashes=32, bands=8)
     return dedup.jaccard_pairs(docs, pairs).filter(F.col("jaccard") >= 0.5)
 
 
@@ -882,10 +845,16 @@ SELECT id_a, id_b, jaccard FROM jac WHERE jaccard >= 0.5
 )
 
 
-def _incremental_matches(spark: SparkSession, sf_dir: str, portable: bool) -> DataFrame:
-    """Corpus = documents with doc_id % 3 != 0 (their signature/band index
+def q_incremental_dedup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental ingest dedup (llm/incremental.py): a new batch matched
+    against the corpus's persistent MinHash signature index — O(batch)
+    per ingest, candidates from the (band, bucket) join, similarity from
+    signature agreement (the MinHash Jaccard estimator), no text re-read.
+    Corpus = documents with doc_id % 3 != 0 (their signature/band index
     tables built once); batch = the % 3 == 0 docs.  Output = the batch's
-    matches against the index (new_id, corpus_id, est_jaccard >= 0.5)."""
+    matches against the index (new_id, corpus_id, est_jaccard >= 0.5);
+    DuckDB reproduces signatures, band buckets and the agreement
+    estimate byte-for-byte."""
     from dataintegration_ecomprovider_spark.llm import incremental
 
     docs = Catalog(spark, sf_dir).table("documents")
@@ -893,31 +862,12 @@ def _incremental_matches(spark: SparkSession, sf_dir: str, portable: bool) -> Da
     batch = docs.filter(F.col("doc_id") % 3 == 0)
     # corpus-sized index build: spread here (the batch side stays
     # unspread — ADVICE r13 moved the spread out of the primitive)
-    idx_sigs = dedup.minhash_signatures(
-        runtime.spread_scan(corpus), portable=portable
-    )
-    idx_bands = dedup.band_buckets(idx_sigs, portable=portable)
+    idx_sigs = dedup.minhash_signatures(runtime.spread_scan(corpus))
+    idx_bands = dedup.band_buckets(idx_sigs)
     step = incremental.dedup_batch_against_index(
-        batch, idx_sigs, idx_bands, threshold=0.5, portable=portable
+        batch, idx_sigs, idx_bands, threshold=0.5
     )
     return step["matches"]
-
-
-def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental ingest dedup (llm/incremental.py): a new batch matched
-    against the corpus's persistent MinHash signature index — O(batch)
-    per ingest, candidates from the (band, bucket) join, similarity from
-    signature agreement (the MinHash Jaccard estimator), no text re-read.
-    Fast path (xxhash64): rows-only driver check; the _portable twin is
-    the full oracle gate."""
-    return _incremental_matches(spark, sf_dir, portable=False)
-
-
-def q_incremental_dedup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """llm_dedup_incremental on the portable md5 hash family — DuckDB
-    reproduces signatures, band buckets and the agreement estimate
-    byte-for-byte."""
-    return _incremental_matches(spark, sf_dir, portable=True)
 
 
 ORACLE_INCREMENTAL_PORTABLE = (
@@ -961,9 +911,7 @@ WHERE len(list_filter(range(32), j -> x.sig[j+1] = y.sig[j+1])) / 32.0 >= 0.5
 )
 
 
-def _dedup_index_cdc(
-    spark: SparkSession, sf_dir: str, portable: bool
-) -> DataFrame:
+def q_dedup_index_cdc_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash index as a CDC-MAINTAINED VIEW (round 7,
     incremental.maintain_dedup_index): the signature/band side tables
     follow the corpus through deletes and edits, so a curation pass
@@ -984,12 +932,12 @@ def _dedup_index_cdc(
     docs = Catalog(spark, sf_dir).table("documents")
     corpus = docs.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
     batch = docs.filter(F.col("doc_id") % 3 == 0)
-    root = _scratch_store_root(f"dedup_idx_{int(portable)}")
+    root = _scratch_store_root("dedup_idx")
     publish.publish_tables(
         spark, {"documents": corpus}, root,
         table_keys={"documents": ["doc_id"]},
     )
-    res = incremental.maintain_dedup_index(spark, root, portable=portable)
+    res = incremental.maintain_dedup_index(spark, root)
     assert res["mode"] == "seed", res
     # curation pass: drop every fifth kept doc, edit every seventh —
     # one MoR commit carrying updates + delete markers
@@ -999,22 +947,14 @@ def _dedup_index_cdc(
     ).withColumn("text", F.concat(F.col("text"), F.lit(" curated")))
     deleted = cur.filter(F.col("doc_id") % 5 == 1).select("doc_id")
     publish.merge_into_mor(spark, root, "documents", updated, deletes=deleted)
-    res = incremental.maintain_dedup_index(spark, root, portable=portable)
+    res = incremental.maintain_dedup_index(spark, root)
     assert res["mode"] == "delta", res
     return incremental.match_against_index(
-        dedup.minhash_signatures(batch, portable=portable),
+        dedup.minhash_signatures(batch),
         publish.read_table(spark, root, "minhash_sigs"),
         publish.read_table(spark, root, "minhash_bands"),
-        threshold=0.5, portable=portable,
+        threshold=0.5,
     )
-
-
-def q_dedup_index_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _dedup_index_cdc(spark, sf_dir, portable=False)
-
-
-def q_dedup_index_cdc_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _dedup_index_cdc(spark, sf_dir, portable=True)
 
 
 # The index the batch matches against must reflect the POST-curation
@@ -1240,7 +1180,7 @@ LIMIT 25
 
 
 def q_dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate CLUSTERS: portable-minhash candidate pairs (jaccard
+    """Near-duplicate CLUSTERS: minhash candidate pairs (jaccard
     >= 0.5) grouped into connected components (llm/cluster.py — pointer-
     jumping label propagation, O(log diameter) rounds, no driver-side
     union-find), every doc mapped to its cluster id (min doc_id in the
@@ -1249,7 +1189,7 @@ def q_dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataintegration_ecomprovider_spark.llm import cluster
 
     docs = Catalog(spark, sf_dir).table("documents")
-    pairs = dedup.minhash_candidates(docs, num_hashes=32, bands=8, portable=True)
+    pairs = dedup.minhash_candidates(docs, num_hashes=32, bands=8)
     pairs = dedup.jaccard_pairs(docs, pairs).filter(F.col("jaccard") >= 0.5)
     return cluster.dedup_clusters(docs.select("doc_id"), pairs)
 
@@ -1284,9 +1224,9 @@ FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
 
 
 def q_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """llm_dedup_simhash with the portable hash family (60 usable bits)."""
+    """60-bit simhash fingerprints over word-bigram shingles."""
     docs = Catalog(spark, sf_dir).table("documents")
-    return dedup.simhash_signatures(docs, bits=60, portable=True)
+    return dedup.simhash_signatures(docs)
 
 
 ORACLE_SIMHASH_PORTABLE = (
@@ -1303,8 +1243,8 @@ FROM hs
 )
 
 
-# DuckDB spelling of the portable hyperplane bucket
-# (llm/similarity.py::hyperplane_bucket portable=True): plane p's ±1 sign
+# DuckDB spelling of the hyperplane bucket
+# (llm/similarity.py::hyperplane_bucket): plane p's ±1 sign
 # for dimension d has the parity of md5('p:d'); bucket = Σ 2^p over planes
 # whose signed projection is positive.
 def _bucket_sql(planes: int) -> str:
@@ -1351,7 +1291,7 @@ SELECT query_id, neighbor_id, similarity, rank FROM ranked WHERE rank <= 5
 
 def q_near_dup_embedding_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = Catalog(spark, sf_dir).table("embeddings")
-    return similarity.near_dup_pairs_lsh(emb, threshold=0.2, planes=6, portable=True)
+    return similarity.near_dup_pairs_lsh(emb, threshold=0.2, planes=6)
 
 
 ORACLE_NEAR_DUP_LSH_PORTABLE = f"""
@@ -1374,7 +1314,7 @@ SELECT DISTINCT id_a, id_b, similarity FROM pairs WHERE similarity >= 0.2
 def q_lsh_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = Catalog(spark, sf_dir).table("embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.lsh_topk(emb, queries, k=5, planes=6, portable=True)
+    return similarity.lsh_topk(emb, queries, k=5, planes=6)
 
 
 ORACLE_LSH_TOPK_PORTABLE = f"""
@@ -1403,23 +1343,24 @@ SELECT query_id, neighbor_id, similarity, rank FROM ranked WHERE rank <= 5
 def q_ivf_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = Catalog(spark, sf_dir).table("embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.ivf_topk(
-        emb, queries, k=5, n_centroids=16, n_probe=4, portable=True
-    )
+    return similarity.ivf_topk(emb, queries, k=5, n_centroids=16, n_probe=4)
 
 
-def _ivf_index_roundtrip(spark: SparkSession, sf_dir: str, portable: bool) -> DataFrame:
-    """Build the IVF index ONCE, publish it to a throwaway versioned
+def q_ivf_index_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN serving from a PERSISTED IVF index (llm/similarity.py::
+    ivf_index + ivf_topk_from_index through the versioned store) — the
+    corpus-scale assignment pass runs once at index-build, not per query
+    batch.  Build the index ONCE, publish it to a throwaway versioned
     store (cells bucketed on the cell id — probe joins read co-located
     buckets), read it back, and serve the query batch from the stored
-    index.  Must be result-identical to the inline ivf_topk, so the
-    portable twin reuses ORACLE_IVF_TOPK_PORTABLE verbatim."""
+    index.  Must be result-identical to the inline ivf_topk, so it
+    reuses ORACLE_IVF_TOPK_PORTABLE verbatim."""
     from dataintegration_ecomprovider_spark.plans import publish
 
     emb = Catalog(spark, sf_dir).table("embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    idx = similarity.ivf_index(emb, n_centroids=16, portable=portable)
-    root = _scratch_store_root(f"ivf_index_{int(portable)}")
+    idx = similarity.ivf_index(emb, n_centroids=16)
+    root = _scratch_store_root("ivf_index")
     publish.publish_tables(
         spark,
         {"ivf_centroids": idx["centroids"], "ivf_cells": idx["cells"]},
@@ -1435,43 +1376,18 @@ def _ivf_index_roundtrip(spark: SparkSession, sf_dir: str, portable: bool) -> Da
     )
 
 
-def q_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN serving from a PERSISTED IVF index (llm/similarity.py::
-    ivf_index + ivf_topk_from_index through the versioned store) — the
-    corpus-scale assignment pass runs once at index-build, not per query
-    batch.  Fast path: rows-only; the _portable twin carries the oracle."""
-    return _ivf_index_roundtrip(spark, sf_dir, portable=False)
-
-
-def q_ivf_index_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ivf_index_roundtrip(spark, sf_dir, portable=True)
-
-
-def q_ivf_topk_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with 2 Lloyd refinement iterations on the centroid seed —
-    xxhash64 fast path, rows-only; the md5-family `_portable` twin below
-    carries the DuckDB oracle for the full refinement (recall and
+def q_ivf_topk_refined_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF with 2 Lloyd refinement iterations on the centroid seed,
+    value-checked against a DuckDB oracle that unrolls both iterations
+    in SQL.  The recomputed means are pinned to 9 decimals on BOTH
+    engines (kmeans_refine(round_means=9)) — the only data-dependent
+    floats whose summation order differs across engines (recall and
     determinism additionally pinned in
     tests/test_llm.py::test_ivf_kmeans_refinement)."""
     emb = Catalog(spark, sf_dir).table("embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return similarity.ivf_topk(
         emb, queries, k=5, n_centroids=16, n_probe=4, refine_iters=2
-    )
-
-
-def q_ivf_topk_refined_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle twin of q_ivf_topk_refined on the md5 hash family: the SAME
-    2-iteration Lloyd refinement, value-checked against a DuckDB oracle
-    that unrolls both iterations in SQL.  The recomputed means are pinned
-    to 9 decimals on BOTH engines (kmeans_refine(round_means=9)) — the
-    only data-dependent floats whose summation order differs across
-    engines."""
-    emb = Catalog(spark, sf_dir).table("embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.ivf_topk(
-        emb, queries, k=5, n_centroids=16, n_probe=4, portable=True,
-        refine_iters=2,
     )
 
 
@@ -1504,21 +1420,13 @@ def _lloyd_iter_sql(cent_in: str, cent_out: str) -> str:
 )"""
 
 
-def q_topic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_topic_clusters_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus topic clustering for mixture balancing (round 5,
     similarity.cluster_assignments): hash-seeded k-means (2 Lloyd
     iterations) + final nearest-centroid assignment — (vec_id, cid,
-    csim).  xxhash64 fast path, rows-only; the md5 twin below is
-    oracle-checked."""
+    csim)."""
     emb = Catalog(spark, sf_dir).table("embeddings")
     return similarity.cluster_assignments(emb, n_clusters=16, iters=2)
-
-
-def q_topic_clusters_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = Catalog(spark, sf_dir).table("embeddings")
-    return similarity.cluster_assignments(
-        emb, n_clusters=16, iters=2, portable=True
-    )
 
 
 ORACLE_IVF_TOPK_REFINED_PORTABLE = f"""
@@ -1561,8 +1469,8 @@ SELECT query_id, neighbor_id, similarity, rank FROM ranked WHERE rank <= 5
 """
 
 
-def _topic_clusters_incremental(
-    spark: SparkSession, sf_dir: str, portable: bool
+def q_topic_clusters_incremental_portable(
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Two-batch incremental topic maintenance (round 6): build + refine
     the centroid index on the FIRST ingest batch only, publish centroids
@@ -1571,7 +1479,7 @@ def _topic_clusters_incremental(
     scoring — the corpus that built the index is never re-touched) and
     merge the delta in.  Already-assigned rows stay byte-stable (pinned
     in tests/test_llm_incremental.py); the continuously-fed corpus's
-    mixture-balancing loop, pairing with llm_dedup_incremental's
+    mixture-balancing loop, pairing with llm_dedup_incremental_portable's
     MinHash-index ingest pattern.  Recentering = periodic index rebuild
     in a maintenance pass."""
     from dataintegration_ecomprovider_spark.plans import publish
@@ -1580,10 +1488,8 @@ def _topic_clusters_incremental(
     batch1 = emb.filter(F.col("vec_id") % 2 == 0)
     batch2 = emb.filter(F.col("vec_id") % 2 != 0)
 
-    idx = similarity.ivf_index(
-        batch1, n_centroids=16, portable=portable, refine_iters=2
-    )
-    root = _scratch_store_root(f"topic_incr_{int(portable)}")
+    idx = similarity.ivf_index(batch1, n_centroids=16, refine_iters=2)
+    root = _scratch_store_root("topic_incr")
     publish.publish_tables(
         spark,
         {
@@ -1603,16 +1509,6 @@ def _topic_clusters_incremental(
     return publish.read_table(spark, root, "topic_assignments")
 
 
-def q_topic_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _topic_clusters_incremental(spark, sf_dir, portable=False)
-
-
-def q_topic_clusters_incremental_portable(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    return _topic_clusters_incremental(spark, sf_dir, portable=True)
-
-
 def q_topic_recenter_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full incremental-topic LIFECYCLE (round 6): seed the centroid
     index on ingest batch 1, assign batch 2 against the stale persisted
@@ -1630,9 +1526,7 @@ def q_topic_recenter_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = Catalog(spark, sf_dir).table("embeddings")
     batch1 = emb.filter(F.col("vec_id") % 2 == 0)
-    idx = similarity.ivf_index(
-        batch1, n_centroids=16, portable=True, refine_iters=2
-    )
+    idx = similarity.ivf_index(batch1, n_centroids=16, refine_iters=2)
     root = _scratch_store_root("topic_recenter")
     publish.publish_tables(
         spark,
@@ -1653,8 +1547,7 @@ def q_topic_recenter_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
             publish.read_table(spark, root, "topic_centroids"),
         ),
     )
-    spec = {"corpus_table": "embeddings", "n_clusters": 16, "iters": 2,
-            "portable": True}
+    spec = {"corpus_table": "embeddings", "n_clusters": 16, "iters": 2}
     # healthy threshold (cosine mean is always ≥ -1) → measured, skipped,
     # and nothing published
     v0 = publish.current_manifest(root)["version"]
@@ -1709,16 +1602,16 @@ SELECT vec_id, cid, csim FROM aranked WHERE crank = 1
 """
 
 
-def _topic_assignments_cdc(
-    spark: SparkSession, sf_dir: str, portable: bool
+def q_topic_assignments_cdc_portable(
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Topic assignments as a CDC-MAINTAINED VIEW (round 7,
     similarity.maintain_topic_assignments): the assignments table
     follows the embeddings table through inserts, UPDATES and DELETES —
     the stale-row gap a bare assign_to_index ingest loop leaves when a
     dedup/curation pass removes documents.  Lifecycle: seed on ingest
-    batch 1 (centroids built there, portable md5 seeding for the
-    oracle), MoR-insert batch 2 and refresh (O(batch) against the
+    batch 1 (centroids built there, md5 seeding for the oracle),
+    MoR-insert batch 2 and refresh (O(batch) against the
     persisted centroids), then a curation pass — delete every vec_id ≡ 3
     (mod 5), flip the vectors of vec_id ≡ 1 (mod 7) — lands as ONE MoR
     commit whose CDC the next refresh consumes: re-score the updated
@@ -1730,10 +1623,8 @@ def _topic_assignments_cdc(
 
     emb = Catalog(spark, sf_dir).table("embeddings")
     batch1 = emb.filter(F.col("vec_id") % 2 == 0)
-    idx = similarity.ivf_index(
-        batch1, n_centroids=16, portable=portable, refine_iters=1
-    )
-    root = _scratch_store_root(f"topic_cdc_{int(portable)}")
+    idx = similarity.ivf_index(batch1, n_centroids=16, refine_iters=1)
+    root = _scratch_store_root("topic_cdc")
     publish.publish_tables(
         spark,
         {"embeddings": batch1, "topic_centroids": idx["centroids"]},
@@ -1759,18 +1650,7 @@ def _topic_assignments_cdc(
     publish.merge_into_mor(spark, root, "embeddings", updated, deletes=deleted)
     res = similarity.maintain_topic_assignments(spark, root)
     assert res["mode"] == "delta", res
-    out = publish.read_table(spark, root, "topic_assignments")
-    return out
-
-
-def q_topic_assignments_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _topic_assignments_cdc(spark, sf_dir, portable=False)
-
-
-def q_topic_assignments_cdc_portable(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    return _topic_assignments_cdc(spark, sf_dir, portable=True)
+    return publish.read_table(spark, root, "topic_assignments")
 
 
 # Centroids derive from batch 1 (vec_id % 2 = 0) alone; the maintained
@@ -1876,9 +1756,7 @@ SELECT query_id, neighbor_id, similarity, rank FROM ranked WHERE rank <= 5
 """
 
 
-def _ann_index_cdc(
-    spark: SparkSession, sf_dir: str, portable: bool
-) -> DataFrame:
+def q_ann_index_cdc_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted ANN index as a CDC-MAINTAINED VIEW (round 7,
     similarity.maintain_ivf_cells): the IVF cell table follows the
     embeddings table, so similarity search stops returning vectors
@@ -1896,8 +1774,8 @@ def _ann_index_cdc(
 
     emb = Catalog(spark, sf_dir).table("embeddings")
     batch1 = emb.filter(F.col("vec_id") % 2 == 0)
-    idx = similarity.ivf_index(batch1, n_centroids=16, portable=portable)
-    root = _scratch_store_root(f"ann_cdc_{int(portable)}")
+    idx = similarity.ivf_index(batch1, n_centroids=16)
+    root = _scratch_store_root("ann_cdc")
     publish.publish_tables(
         spark,
         {"embeddings": batch1, "ivf_centroids": idx["centroids"]},
@@ -1924,14 +1802,6 @@ def _ann_index_cdc(
         publish.read_table(spark, root, "ivf_cells"),
         k=5, n_probe=4,
     )
-
-
-def q_ann_index_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ann_index_cdc(spark, sf_dir, portable=False)
-
-
-def q_ann_index_cdc_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ann_index_cdc(spark, sf_dir, portable=True)
 
 
 # Centroids from batch 1 (md5 rank pick, no refine); cells and probes
@@ -2172,13 +2042,11 @@ SELECT span, CAST(width AS INTEGER) AS width, n_docs FROM m3
 
 
 # --- SemDeDup: cluster-scoped semantic deduplication ----------------------
-def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_semantic_dedup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) over the embeddings table: IVF-cluster
     the space, drop every vector with a lower-id near-twin (cosine ≥ 0.25)
     in its cluster (llm/similarity.py::semantic_dedup).  Work is Σ|cell|²,
-    never |corpus|² — the published recipe for semantic dedup at web scale.
-    Fast path (xxhash64 centroid pick): rows-only; the _portable twin
-    carries the DuckDB oracle."""
+    never |corpus|² — the published recipe for semantic dedup at web scale."""
     # guide §2.5 spread (round-14 interleaved A/B: min 2.64 → 2.30 s,
     # 6-rep sums 16.8 → 16.1): centroid pick is totally ordered, cell
     # assignment/pair join order-insensitive
@@ -2186,13 +2054,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.semantic_dedup(emb, threshold=0.25, n_centroids=16).select(
         "vec_id"
     )
-
-
-def q_semantic_dedup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = runtime.spread_scan(Catalog(spark, sf_dir).table("embeddings"))
-    return similarity.semantic_dedup(
-        emb, threshold=0.25, n_centroids=16, portable=True
-    ).select("vec_id")
 
 
 ORACLE_SEMANTIC_DEDUP_PORTABLE = f"""
@@ -3757,18 +3618,13 @@ QUERIES = {
     "llm_training_shards": QueryDef(q_training_shards, ORACLE_TRAINING_SHARDS),
     "llm_multimodal_frames": QueryDef(q_multimodal_frames, ORACLE_MULTIMODAL_FRAMES),
     "llm_near_dup_embedding": QueryDef(q_near_dup_embedding, ORACLE_NEAR_DUP_EMBEDDING),
-    "llm_near_dup_embedding_lsh": QueryDef(q_near_dup_embedding_lsh, None, retired=True),
     "llm_repeated_spans": QueryDef(q_repeated_spans, ORACLE_REPEATED_SPANS),
     "llm_repeated_spans_maximal": QueryDef(
         q_repeated_spans_maximal, ORACLE_REPEATED_SPANS_MAXIMAL
     ),
-    "llm_semantic_dedup": QueryDef(q_semantic_dedup, None, retired=True),
     "llm_semantic_dedup_portable": QueryDef(
         q_semantic_dedup_portable, ORACLE_SEMANTIC_DEDUP_PORTABLE
     ),
-    "llm_sim_ivf_topk": QueryDef(q_ivf_topk, None, retired=True),
-    "llm_dedup_minhash_lsh": QueryDef(q_minhash_candidates, None, retired=True),
-    "llm_dedup_simhash": QueryDef(q_simhash, None, retired=True),
     "llm_ngram_jaccard": QueryDef(q_ngram_jaccard, ORACLE_NGRAM_JACCARD),
     "llm_sim_cosine_topk": QueryDef(q_cosine_topk, ORACLE_COSINE_TOPK),
     "llm_sim_topk_quantized": QueryDef(q_topk_quantized, ORACLE_TOPK_QUANTIZED),
@@ -3782,7 +3638,6 @@ QUERIES = {
     ),
     "llm_sim_ivfpq_topk": QueryDef(q_ivfpq_topk, ORACLE_IVFPQ_TOPK),
     "llm_pq_codes_cdc": QueryDef(q_pq_codes_cdc, ORACLE_PQ_CODES_CDC),
-    "llm_sim_lsh_topk": QueryDef(q_lsh_topk, None, retired=True),
     "llm_text_quality": QueryDef(q_text_quality, ORACLE_TEXT_QUALITY),
     "llm_lang_id": QueryDef(q_lang_id, ORACLE_LANG_ID),
     "llm_token_counts": QueryDef(q_token_counts, ORACLE_TOKEN_COUNTS),
@@ -3817,8 +3672,6 @@ QUERIES = {
     "llm_fingerprint": QueryDef(q_fingerprint, ORACLE_FINGERPRINT),
     "llm_multimodal_features": QueryDef(q_multimodal_features, ORACLE_MULTIMODAL),
     "llm_dedup_minhash_lsh_portable": QueryDef(q_minhash_portable, ORACLE_MINHASH_PORTABLE),
-    "llm_dedup_incremental": QueryDef(q_incremental_dedup, None, retired=True),
-    "llm_dedup_index_cdc": QueryDef(q_dedup_index_cdc, None, retired=True),
     "llm_text_index_cdc": QueryDef(q_text_index_cdc, ORACLE_TEXT_INDEX_CDC),
     "llm_text_search_ranked": QueryDef(
         q_text_search_ranked, ORACLE_TEXT_SEARCH_RANKED
@@ -3845,20 +3698,16 @@ QUERIES = {
         q_ivf_topk_portable, ORACLE_IVF_TOPK_PORTABLE,
         folded_into="llm_ann_index_cdc_portable",
     ),
-    "llm_sim_ivf_index_topk": QueryDef(q_ivf_index_topk, None, retired=True),
     "llm_sim_ivf_index_topk_portable": QueryDef(
         q_ivf_index_topk_portable, ORACLE_IVF_TOPK_PORTABLE,
         folded_into="llm_ann_index_cdc_portable",
     ),
-    "llm_sim_ivf_topk_refined": QueryDef(q_ivf_topk_refined, None, retired=True),
-    "llm_ann_index_cdc": QueryDef(q_ann_index_cdc, None, retired=True),
     "llm_ann_index_cdc_portable": QueryDef(
         q_ann_index_cdc_portable, ORACLE_ANN_INDEX_CDC_PORTABLE
     ),
     "llm_sim_ivf_topk_refined_portable": QueryDef(
         q_ivf_topk_refined_portable, ORACLE_IVF_TOPK_REFINED_PORTABLE
     ),
-    "llm_topic_clusters": QueryDef(q_topic_clusters, None, retired=True),
     # folded (round-10 governance): the recenter lifecycle's final table
     # is value-identical to cluster_assignments over the whole corpus —
     # the two entries share ONE oracle string, so the batch clustering
@@ -3866,9 +3715,6 @@ QUERIES = {
     "llm_topic_clusters_portable": QueryDef(
         q_topic_clusters_portable, ORACLE_TOPIC_CLUSTERS_PORTABLE,
         folded_into="llm_topic_recenter_portable",
-    ),
-    "llm_topic_clusters_incremental": QueryDef(
-        q_topic_clusters_incremental, None, retired=True
     ),
     "llm_topic_clusters_incremental_portable": QueryDef(
         q_topic_clusters_incremental_portable,
@@ -3879,7 +3725,6 @@ QUERIES = {
     "llm_topic_recenter_portable": QueryDef(
         q_topic_recenter_portable, ORACLE_TOPIC_CLUSTERS_PORTABLE
     ),
-    "llm_topic_assignments_cdc": QueryDef(q_topic_assignments_cdc, None, retired=True),
     "llm_topic_assignments_cdc_portable": QueryDef(
         q_topic_assignments_cdc_portable,
         ORACLE_TOPIC_ASSIGNMENTS_CDC_PORTABLE,

@@ -95,11 +95,15 @@ def span_change_feed(
     the version numbers: sibling views watermark at slightly shifted
     versions (each view's own commits advance the store), but a span
     over which `src`'s entry did not move carries the identical feed —
-    the diff plan is a pure function of the two entries (the fast path's
-    delta suffix is their delta-list difference; entries can never
-    revert to an earlier value because data paths carry fresh txids).
-    `where`-scoped feeds keep the raw versions in the key (their scan
-    resolution is version-addressed)."""
+    the diff plan is a pure function of the two entries, because every
+    data path an entry names is an immutable version directory (the
+    fast path's delta suffix is their delta-list difference).  An entry
+    can recur at a later version — publish.rollback() re-commits an
+    older table map verbatim — and still names the same immutable
+    files, so the cached feed stays equal.  `where`-scoped feeds also
+    keep the raw versions in the key (their scan resolution is
+    version-addressed), in a slot of their own that the supersede pass
+    ignores."""
     import weakref
 
     ident = (
@@ -113,8 +117,8 @@ def span_change_feed(
     key = (
         id(spark), os.path.realpath(root), src, ident, tuple(keys),
         bool(include_old),
-        (repr(tuple(where)), int(from_version), int(to_version))
-        if where else None,
+        repr(tuple(where)) if where else None,
+        (int(from_version), int(to_version)) if where else None,
     )
     hit = _SPAN_FEEDS.get(key)
     if hit is not None:

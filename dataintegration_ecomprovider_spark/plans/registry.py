@@ -18,26 +18,19 @@ from pyspark.sql import DataFrame, SparkSession
 class QueryDef:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
-    # retired=True keeps the query runnable (tests, scale probes) but off
-    # the driver-facing surface: every retired entry is a hash-seeded
-    # fast path whose `_portable` twin carries the SAME algorithm under
-    # an oracle-checkable hash family — grading both wasted rotation
-    # slots on rows-only checks the twin already covers with a full
-    # value-hash MATCH (tests/test_retired_fastpaths.py pins the
-    # twin contract: same schema, fast path still runs)
-    retired: bool = False
     # folded_into="<name>" removes a NEAR-DUPLICATE surface from the
     # driver-facing registry (round-10 governance: the registry is
     # hard-capped at 150 = 3×50 driver rotation slots, so new operators
-    # displace consolidated ones).  Unlike retired fast paths, a folded
-    # entry KEEPS its oracle — tests/test_retired_fastpaths.py value-
-    # checks it against DuckDB every run, so the grade is not lost, it
-    # just stops consuming a rotation slot its covering entry (the
-    # richer superset lifecycle named here) already pays for.
+    # displace consolidated ones).  A folded entry KEEPS its oracle —
+    # tests/test_retired_fastpaths.py value-checks it against DuckDB
+    # every run, so the grade is not lost, it just stops consuming a
+    # rotation slot its covering entry (the richer superset lifecycle
+    # named here) already pays for.
     folded_into: str | None = None
 
 
 def all_queries(include_retired: bool = False) -> dict[str, QueryDef]:
+    """Every registered query; folded entries only with include_retired."""
     from dataintegration_ecomprovider_spark.plans import (
         read_queries, write_queries, llm_queries, stream_queries, temporal_queries,
     )
@@ -49,8 +42,5 @@ def all_queries(include_retired: bool = False) -> dict[str, QueryDef]:
             raise ValueError(f"duplicate query names: {overlap}")
         out.update(mod.QUERIES)
     if not include_retired:
-        out = {
-            n: qd for n, qd in out.items()
-            if not qd.retired and qd.folded_into is None
-        }
+        out = {n: qd for n, qd in out.items() if qd.folded_into is None}
     return out

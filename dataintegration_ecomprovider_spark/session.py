@@ -39,19 +39,8 @@ def get_spark(app_name: str = "dataintegration-ecomprovider-spark") -> SparkSess
         # scripts/ diagnostics read per-job callsites from the REST API.
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # guide §3.1: preferSortMergeJoin=false (shuffled-hash joins) was
-        # TRIED and REVERTED in round 13 — an initial 8-query A/B showed
-        # −9%, but four alternating re-runs and a suite-level bench could
-        # not reproduce it (the original delta was window drift on this
-        # shared VM; OPTIMIZATION_r13.md wave 4 records all the numbers).
-        # Spark's default (sort-merge preference) stays: it is also the
-        # safer choice at 100 TB, where an SHJ build-side partition that
-        # misses memory is an OOM instead of a graceful sort-merge spill.
-        # Re-testable via SPARK_GRAFT_PREFER_SMJ=false.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
+        # preferSortMergeJoin stays at Spark's default (true): shuffled-hash
+        # joins showed no reproducible gain (OPTIMIZATION_r13.md wave 4).
         # INT64 micros instead of Spark's legacy INT96: INT96 carries NO
         # parquet column statistics, so timestamp predicates could never
         # file-skip and metadata_aggregate could never answer them; micros

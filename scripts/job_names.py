@@ -4,12 +4,15 @@ Usage: python scripts/job_names.py <query_name> [sf_dir] [reps]
 
 Runs the query `reps` times and, for the LAST rep, prints every Spark
 job launched: id, name (callsite), duration, task count.  Needs the UI
-(spark.ui.enabled) — session.py leaves it on.  Diagnostic only.
+(spark.ui.enabled), which session.py turns off unless SPARK_GRAFT_UI=true,
+so the script sets SPARK_GRAFT_UI=true before the session starts.
+Diagnostic only.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
@@ -27,6 +30,7 @@ def main() -> int:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
 
+    os.environ["SPARK_GRAFT_UI"] = "true"
     spark = get_spark("job-names")
     from dataintegration_ecomprovider_spark.plans.registry import all_queries
 

@@ -454,8 +454,6 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from dataintegration_ecomprovider_spark.plans.registry import all_queries
 
-    # include_retired: the probe times the hash-seeded FAST paths too —
-    # they are off the driver surface but still the production hot path
     queries = {n: qd.fn for n, qd in all_queries(include_retired=True).items()}
     queries["products_export_j4_p6_a1_a8"] = entrymod._q_products_export
     names = [
@@ -464,14 +462,14 @@ def main() -> None:
         "u12_pipeline_run_job_bucketed",
         "e5_membership_explode",
         "u9_relation_swap",
-        "llm_dedup_minhash_lsh",
+        "llm_dedup_minhash_lsh_portable",
         "llm_chunk_documents",
         "llm_fingerprint",
         "u12_version_diff",      # CDC diff at 10x (two publishes + full-outer)
         "u12_cdc_apply",         # diff + replay round-trip at 10x
         "u12_data_skipping_scan",  # stats collection + pruned scan at 10x
         "u12_store_replicate",     # seed + delta sync at 10x
-        "llm_semantic_dedup",      # cluster-scoped pair work at 10x
+        "llm_semantic_dedup_portable",  # cluster-scoped pair work at 10x
         "u12_incremental_aggregate",  # IVM refresh at 10x
         "u12_incremental_join",    # join-view scoped rebuild at 10x
         "u12_merge_on_read",       # MoR delta merges + reconstruction at 10x

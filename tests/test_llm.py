@@ -1,6 +1,6 @@
-"""Invariant tests for the hash-based LLM operators that have no SQL oracle
-(minhash LSH, simhash, hyperplane LSH) — determinism, recall on planted
-duplicates, and consistency between approximate and exact paths."""
+"""Invariant tests for the hash-based LLM operators (minhash LSH, simhash,
+hyperplane LSH) beyond their DuckDB oracles — determinism, recall on
+planted duplicates, and consistency between approximate and exact paths."""
 
 from __future__ import annotations
 
@@ -214,6 +214,8 @@ def test_simhash_forms_parity(spark):
     a = {r.doc_id: r.simhash for r in staged.collect()}
     b = {r.doc_id: r.simhash for r in column.collect()}
     assert a == b
+    # md5_int60 shingle hashes leave bits 60-63 constant: 60-bit prints
+    assert all(0 <= v < 2**60 for v in a.values())
 
 
 def test_semantic_dedup_invariants(spark):
@@ -341,11 +343,6 @@ def test_cluster_assignments_partition_corpus_deterministically(spark):
         emb, n_clusters=8, iters=2
     ).collect()}
     assert {(r.vec_id, r.cid) for r in rows} == again
-    # portable twin clusters the same corpus (different seed family)
-    portable = similarity.cluster_assignments(
-        emb, n_clusters=8, iters=2, portable=True
-    )
-    assert portable.count() == n
 
 
 def test_pq_topk_recall_and_shape(spark):

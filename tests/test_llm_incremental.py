@@ -322,8 +322,7 @@ def test_incremental_topic_assignment_is_stable_and_o_batch(spark, tmp_path):
     batch1 = emb.filter(F.col("vec_id") % 2 == 0)
     batch2 = emb.filter(F.col("vec_id") % 2 != 0)
 
-    idx = similarity.ivf_index(batch1, n_centroids=8, portable=True,
-                               refine_iters=2)
+    idx = similarity.ivf_index(batch1, n_centroids=8, refine_iters=2)
     root = str(tmp_path / "topics")
     seed = similarity.assign_to_index(batch1, idx["centroids"])
     publish.publish_tables(

@@ -1298,3 +1298,31 @@ def test_span_feed_dropped_by_uncache_hook_and_reminted_store(
     assert key1 != key2
     assert n2 == 1
     materialize.clear_span_feeds()
+
+
+def test_where_scoped_span_feed_superseded_by_next_refresh(spark, tmp_path):
+    """A `where`-scoped feed keys its span versions apart from its shape,
+    so the next refresh of the same filtered view evicts the older span's
+    persisted feed instead of leaving it cached until the FIFO cap."""
+    materialize.clear_span_feeds()
+    root = str(tmp_path / "store")
+    schema = "id bigint, shop string, grp string, val double"
+    publish.publish_tables(
+        spark,
+        {"t": spark.createDataFrame([(1, "s1", "a", 1.0), (2, "s2", "a", 2.0)],
+                                    schema)},
+        root, table_keys={"t": ["id"]},
+    )
+    spec = dict(src="t", dst="t_s1_agg", group_cols=["grp"],
+                sum_cols=["val"], src_where=[("shop", "=", "s1")])
+    assert materialize.maintain_aggregate(spark, root, **spec)["mode"] == "seed"
+    for i in (3, 4):
+        publish.merge_into(
+            spark, root, "t",
+            spark.createDataFrame([(i, "s1", "b", float(i))], schema),
+        )
+        res = materialize.maintain_aggregate(spark, root, **spec)
+        assert res["mode"] == "delta", res
+    feeds = [k for k in materialize._SPAN_FEEDS if k[2] == "t"]
+    assert len(feeds) == 1, feeds
+    materialize.clear_span_feeds()

@@ -1,31 +1,17 @@
-"""Retired hash-seeded fast paths (registry.QueryDef.retired):
+"""Registry governance: folded entries and the driver-slot cap.
 
-Round 9 removed the 14 rows-only fast-path queries from the
-driver-facing registry — their ``_portable`` twins run the SAME
-algorithm on the md5-derived hash family (llm/portable.py) and carry an
-oracle-checked value-hash MATCH, so grading both wasted rotation slots.
-This suite keeps the fast paths honest off-surface:
-
-- every retired entry still RUNS (the xxhash64 path is the production
-  hot path — the portable family exists only for DuckDB parity);
-- its schema is IDENTICAL to its portable twin's (same columns, same
-  types — the twin's oracle grade transfers to the shape);
-- retirement is exactly the rows-only set: every retired entry has a
-  portable twin, and no driver-facing entry lacks an oracle.
+A folded entry (registry.QueryDef.folded_into) leaves the driver-facing
+registry because a richer covering entry pays its rotation slot; it stays
+reachable through ``all_queries(include_retired=True)`` and keeps its
+oracle, which this suite value-checks against DuckDB every run.  Every
+registered entry, folded or not, has an oracle.
 """
 
 from __future__ import annotations
 
-import pytest
-
 from dataintegration_ecomprovider_spark.plans.registry import all_queries
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _retired():
-    full = all_queries(include_retired=True)
-    return {n: qd for n, qd in full.items() if qd.retired}
 
 
 def _folded():
@@ -33,26 +19,17 @@ def _folded():
     return {n: qd for n, qd in full.items() if qd.folded_into}
 
 
-def test_retirement_is_exactly_the_rows_only_set():
-    full = all_queries(include_retired=True)
-    retired = _retired()
-    assert len(retired) == 14
-    for name, qd in retired.items():
-        assert qd.oracle is None, f"{name} has an oracle — why retired?"
-        twin = full.get(f"{name}_portable")
-        assert twin is not None, f"{name} retired without a portable twin"
-        assert twin.oracle is not None, f"{name}_portable lacks an oracle"
-        assert not twin.retired
-    # the driver-facing surface is now fully oracle-gated
+def test_every_registry_entry_has_an_oracle():
+    for name, qd in all_queries(include_retired=True).items():
+        assert qd.oracle is not None, f"{name} lacks an oracle"
     for name, qd in all_queries().items():
-        assert qd.oracle is not None, f"driver-facing {name} lacks oracle"
-        assert not qd.retired and qd.folded_into is None
+        assert qd.folded_into is None, f"folded {name} is driver-facing"
 
 
 def test_registry_is_hard_capped_at_150_driver_slots():
     """Round-10 governance: 149 registry entries + the flagship = 150 =
     exactly 3×50 driver rotation slots, so no query waits more than 3
-    rounds between grades.  New operators displace folded/retired ones —
+    rounds between grades.  New operators displace folded ones —
     growing past the cap silently re-dilutes the rotation.
 
     Round-13 exception (+2): the optimization driver re-runs every
@@ -82,13 +59,3 @@ def test_folded_entries_keep_their_oracle_grade(spark, oracle):
         spark_pdf = qd.fn(spark, SF_DIR).toPandas()
         oracle_pdf = oracle.execute(qd.oracle).fetchdf()
         assert_frames_match(spark_pdf, oracle_pdf, name)
-
-
-@pytest.mark.parametrize("name", sorted(_retired()))
-def test_retired_fast_path_runs_with_twin_schema(spark, name):
-    full = all_queries(include_retired=True)
-    fast = full[name].fn(spark, SF_DIR)
-    twin = full[f"{name}_portable"].fn(spark, SF_DIR)
-    assert [(f.name, f.dataType.simpleString()) for f in fast.schema] == \
-        [(f.name, f.dataType.simpleString()) for f in twin.schema]
-    assert fast.limit(1).count() >= 0  # materializes without error
